@@ -14,11 +14,12 @@ ALL sinks for the run committed — the same "ack fires when the last
 ref resolves" rule as payload.rs:426-439.
 
 Delivery semantics: sink rows are exactly-once (every committed row is
-inside a committed range by construction); DROPPED rows falling outside
-all committed ranges (e.g. a garbage line at a partition boundary) may
-be re-observed on resume — dead-letter/quarantine output is therefore
-at-least-once, matching the reference's at-least-once stance
-(offset_tracker.rs pending semantics).
+inside a committed range by construction). That includes the
+dead-letter sink: the quarantine stage tags rows instead of dropping
+them, so they ride the same fan-out and fall inside the committed
+ranges. Rows a filter DROPS before the fan-out may fall outside all
+committed ranges (e.g. a garbage line at a partition boundary) and be
+re-observed — and dropped again — on resume.
 """
 
 from __future__ import annotations
@@ -35,19 +36,7 @@ CHECKPOINT_SCHEMA = (
     "sink_counts string, committed_at timestamp"
 )
 
-
-def partition_ranges(df: DataFrame, key: str = "page_id") -> DataFrame:
-    """Per-input-partition (min,max,count) over the range key."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.min(key).alias("src_min"),
-            F.max(key).alias("src_max"),
-            F.count(F.lit(1)).alias("rows_in"),
-        )
-        .withColumnRenamed("_pid", "partition_id")
-    )
+KEY = "page_id"
 
 
 def write_lineage(
@@ -55,20 +44,17 @@ def write_lineage(
     path: str,
     run_id: str,
     stage: str = "export",
-    key: str = "page_id",
     sink_counts: dict[str, int] | None = None,
-    parsed_col: str | None = "parse_ok",
 ) -> None:
-    """Append committed ranges + counters for this run."""
+    """Append committed ranges + counters for this run; rows_parsed
+    counts ``parse_ok`` rows when the frame has that column."""
     agg = [
-        F.min(key).alias("src_min"),
-        F.max(key).alias("src_max"),
+        F.min(KEY).alias("src_min"),
+        F.max(KEY).alias("src_max"),
         F.count(F.lit(1)).alias("rows_in"),
     ]
-    if parsed_col and parsed_col in df.columns:
-        agg.append(
-            F.sum(F.col(parsed_col).cast("long")).alias("rows_parsed")
-        )
+    if "parse_ok" in df.columns:
+        agg.append(F.sum(F.col("parse_ok").cast("long")).alias("rows_parsed"))
     else:
         agg.append(F.count(F.lit(1)).alias("rows_parsed"))
     ranges = (
@@ -106,12 +92,8 @@ def committed_ranges(spark: SparkSession, path: str, run_id: str) -> DataFrame:
     return cp.filter(F.col("run_id") == run_id)
 
 
-def resume_filter(
-    source: DataFrame,
-    checkpoint: DataFrame,
-    key: str = "page_id",
-) -> DataFrame:
-    """Drop rows whose key falls inside any committed range.
+def resume_filter(source: DataFrame, checkpoint: DataFrame) -> DataFrame:
+    """Drop rows whose range key falls inside any committed range.
 
     Range anti-join via broadcast (checkpoint is tiny: one row per
     partition per run) — at 100 TB the source never shuffles for this.
@@ -121,7 +103,7 @@ def resume_filter(
     )
     joined = source.join(
         ranges,
-        (source[key] >= ranges["src_min"]) & (source[key] <= ranges["src_max"]),
+        (source[KEY] >= ranges["src_min"]) & (source[KEY] <= ranges["src_max"]),
         "left",
     )
     return joined.filter(F.col("src_min").isNull()).drop("src_min", "src_max")

@@ -13,7 +13,7 @@ fan-out boundary does — fanout.rs clone-per-consumer ≈ persist).
 Example config::
 
     {
-      "source": {"kind": "pages_parquet", "path": ..., "reps": 20},
+      "source": {"kind": "pages_synthetic", "sf_dir": ..., "reps": 20},
       "processors": [
         {"kind": "parse_auto"},
         {"kind": "filter", "expr": "parse_ok"},
@@ -31,6 +31,9 @@ Example config::
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -144,6 +147,54 @@ def build_pipeline(config: dict) -> Pipeline:
     return p
 
 
+def sink_plan(config: dict, accumulate: bool) -> tuple[list[dict], int]:
+    """The sinks a job or query writes and its per-file record cap —
+    the one reader of ``config["sinks"]``, shared by ``run_job`` and
+    ``run_stream``.
+
+    * the configured sinks plus, when a ``quarantine`` processor is
+      declared, its dead-letter sink ``_quarantine``; the configured
+      sinks then exclude quarantined rows, so the dead-letter rows fan
+      out in the same pass as the good ones;
+    * ``max_records_per_file`` from ``config["batch"]`` (the
+      reference's max batch size, batch.rs:15-23);
+    * a default write mode: ``append`` when output builds up across
+      invocations (``accumulate``: every stream micro-batch, every
+      resumable job), ``overwrite`` otherwise. A mode set on a sink or
+      on the quarantine processor wins.
+
+    Returns new sink dicts; ``config`` is left untouched."""
+    mode = "append" if accumulate else "overwrite"
+    sinks = [{"mode": mode, **s} for s in config["sinks"]]
+    q_specs = [
+        s for s in config.get("processors", []) if s["kind"] == "quarantine"
+    ]
+    if q_specs:
+        sinks = [
+            {
+                **s,
+                "predicate": (
+                    f"({s['predicate']}) AND NOT _quarantine"
+                    if s.get("predicate")
+                    else "NOT _quarantine"
+                ),
+            }
+            for s in sinks
+        ]
+        sinks.append(
+            {
+                "name": "_quarantine",
+                "path": q_specs[0]["path"],
+                "predicate": "_quarantine",
+                "mode": q_specs[0].get("mode", mode),
+            }
+        )
+    max_records_per_file = config.get("batch", {}).get(
+        "max_records_per_file", 8192
+    )
+    return sinks, max_records_per_file
+
+
 def run_job(
     spark: SparkSession,
     config: dict,
@@ -152,6 +203,10 @@ def run_job(
 ) -> dict[str, int]:
     """Full job: source → stages → fan-out sinks → lineage. Returns
     per-sink row counts.
+
+    With ``lineage_path`` set the job is resumable: rows inside ranges
+    already committed for ``run_id`` are skipped, and sinks default to
+    append so a resumed run adds to what earlier runs committed.
 
     transactional_batch: enables crash-safe batch commit for file
     sinks (requires lineage_path). Each invocation writes its sink
@@ -170,47 +225,53 @@ def run_job(
     on an object store the rename step is replaced by a table-format
     commit, same two-phase structure (north rule: resumable
     mid-pipeline after executor loss)."""
-    import os
-    import shutil
-
     from ..fixtures import extract_log_line, load_pages_full
     from ..lineage import committed_ranges, resume_filter, write_lineage
     from ..sinks.writer import fan_out
 
-    batch_stage = None
-    if transactional_batch is not None:
-        if not config.get("lineage_path"):
-            raise ValueError("transactional_batch requires lineage_path")
-        batch_stage = f"export:{transactional_batch}"
-        cp_all = committed_ranges(spark, config["lineage_path"], run_id)
-        committed_stages = {
-            r["stage"]
-            for r in cp_all.select("stage").distinct().collect()
+    lineage_path = config.get("lineage_path")
+    if transactional_batch is not None and not lineage_path:
+        raise ValueError("transactional_batch requires lineage_path")
+    sinks, max_records_per_file = sink_plan(
+        config, accumulate=bool(lineage_path)
+    )
+
+    # one read of the lineage table serves both the committed-batch
+    # check and the resume filter
+    committed: dict[str, str] = {}
+    if lineage_path:
+        cp = committed_ranges(spark, lineage_path, run_id)
+        committed = {
+            r["stage"]: r["sink_counts"]
+            for r in cp.select("stage", "sink_counts").distinct().collect()
         }
-        if batch_stage in committed_stages:
+
+    batch_stage = None
+    staged_pairs = []
+    if transactional_batch is not None:
+        batch_stage = f"export:{transactional_batch}"
+        if batch_stage in committed:
             # fully committed batch — idempotent re-drive is a no-op;
             # return the recorded counts
-            import json as _json
-
-            row = (
-                cp_all.filter(F.col("stage") == batch_stage)
-                .select("sink_counts")
-                .first()
-            )
-            return _json.loads(row["sink_counts"]) if row else {}
-        for s in config["sinks"]:
-            if not s.get("path"):
-                continue
-            visible = os.path.join(
-                s["path"], f"batch={transactional_batch}"
-            )
-            staging = os.path.join(
-                s["path"], f"_staging_{transactional_batch}"
-            )
-            # roll back orphans from a crashed prior attempt
-            for orphan in (visible, staging):
-                if os.path.exists(orphan):
-                    shutil.rmtree(orphan)
+            return json.loads(committed[batch_stage])
+        # two-phase commit: roll back orphans from a crashed prior
+        # attempt, then write into invisible staging dirs
+        staged_sinks = []
+        for s in sinks:
+            if s.get("path") and s.get("format", "parquet") != "noop":
+                visible = os.path.join(
+                    s["path"], f"batch={transactional_batch}"
+                )
+                staging = os.path.join(
+                    s["path"], f"_staging_{transactional_batch}"
+                )
+                for orphan in (visible, staging):
+                    if os.path.exists(orphan):
+                        shutil.rmtree(orphan)
+                staged_pairs.append((staging, visible))
+                s = {**s, "path": staging}
+            staged_sinks.append(s)
+        sinks = staged_sinks
 
     src = config["source"]
     if src["kind"] == "pages_synthetic":
@@ -223,95 +284,37 @@ def run_job(
 
     # resume: skip ranges already committed for this run_id
     # (min-pending-offset semantics, offset_tracker.rs:50-63)
-    if config.get("lineage_path"):
-        cp = committed_ranges(spark, config["lineage_path"], run_id)
-        if cp.limit(1).count() > 0:
-            df = resume_filter(df, cp, key=config.get("lineage_key", "page_id"))
+    if committed:
+        df = resume_filter(df, cp)
 
     out = build_pipeline(config).run(df)
-
-    # quarantine sink: tagged rows fan out to their own sink in the
-    # same pass; regular sinks exclude them
-    sinks = list(config["sinks"])
-    q_specs = [
-        s
-        for s in config.get("processors", [])
-        if s["kind"] == "quarantine"
-    ]
-    if q_specs and "_quarantine" in out.columns:
-        sinks = [
-            {
-                **s,
-                "predicate": (
-                    f"({s['predicate']}) AND NOT _quarantine"
-                    if s.get("predicate")
-                    else "NOT _quarantine"
-                ),
-            }
-            for s in sinks
-        ]
-        sinks.append(
-            {
-                "name": "_quarantine",
-                "path": q_specs[0]["path"],
-                "predicate": "_quarantine",
-                "mode": q_specs[0].get("mode", "append"),
-            }
-        )
 
     # persist through BOTH fan-out and lineage: the committed ranges
     # must come from the same materialized partitions that fed the sink
     # writes (a re-execution could lay out spark_partition_id
     # differently and commit ranges for rows never written — breaking
     # the exactly-once resume contract), and lineage must not re-run
-    # the parse DAG
-    if batch_stage is not None:
-        # two-phase commit: write into invisible staging dirs
-        staged_pairs = []
-        staged_sinks = []
-        for s in sinks:
-            if s.get("path") and s.get("format", "parquet") != "noop":
-                staging = os.path.join(
-                    s["path"], f"_staging_{transactional_batch}"
-                )
-                visible = os.path.join(
-                    s["path"], f"batch={transactional_batch}"
-                )
-                staged_pairs.append((staging, visible))
-                staged_sinks.append({**s, "path": staging})
-            else:
-                staged_sinks.append(s)
-        sinks = staged_sinks
-
-    need_lineage = bool(config.get("lineage_path"))
-    if need_lineage:
+    # the parse DAG. fan_out sees the cached frame and leaves it be.
+    if lineage_path:
         out = out.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        counts = fan_out(
-            out,
-            sinks,
-            max_records_per_file=config.get("batch", {}).get(
-                "max_records_per_file", 8192
-            ),
-            persist=not need_lineage,
-        )
-        if batch_stage is not None:
-            # phase 2a: atomic renames make every sink's batch visible
-            for staging, visible in staged_pairs:
-                if os.path.exists(staging):
-                    os.rename(staging, visible)
-        if need_lineage:
+        counts = fan_out(out, sinks, max_records_per_file)
+        # phase 2a: atomic renames make every sink's batch visible
+        for staging, visible in staged_pairs:
+            if os.path.exists(staging):
+                os.rename(staging, visible)
+        if lineage_path:
             # phase 2b: lineage commit marks the batch processed; a
             # crash between 2a and here is healed by the next
             # attempt's orphan rollback
             write_lineage(
                 out,
-                config["lineage_path"],
+                lineage_path,
                 run_id=run_id,
                 stage=batch_stage or "export",
                 sink_counts=counts,
             )
     finally:
-        if need_lineage:
+        if lineage_path:
             out.unpersist()
     return counts

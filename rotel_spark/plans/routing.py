@@ -57,9 +57,7 @@ def with_route(df: DataFrame, buckets: int = 8) -> DataFrame:
     ).withColumn("domain_partition", domain_partition(F.col("domain"), buckets))
 
 
-def salted_repartition(
-    df: DataFrame, key: str, n_salt: int = 16, num_partitions: int | None = None
-) -> DataFrame:
+def salted_repartition(df: DataFrame, key: str, n_salt: int = 16) -> DataFrame:
     """Repartition by (key, salt) so a hot key spreads over n_salt tasks.
 
     Use before routed writes; for aggregates Catalyst's partial/final
@@ -67,8 +65,4 @@ def salted_repartition(
     needed when a final-stage group is still too hot (SURVEY.md §2.7).
     """
     salted = df.withColumn("_salt", salt_column(F.col(key), n_salt))
-    if num_partitions:
-        out = salted.repartition(num_partitions, F.col(key), F.col("_salt"))
-    else:
-        out = salted.repartition(F.col(key), F.col("_salt"))
-    return out.drop("_salt")
+    return salted.repartition(F.col(key), F.col("_salt")).drop("_salt")

@@ -48,31 +48,21 @@ def write_routed(
     tail-amortization but produces cores×8×routes tiny files — file
     open/commit overhead dominated the measured write (3.5 s for 768
     ~60 KB files vs 1.4 s for 192 files at 1M rows). Coalesce the
-    write to ROTEL_WRITE_TASKS (default defaultParallelism: one wave
-    of writers, 8× fewer files than the scan; interleaved A/B at BOTH
-    1M and 10M rows put 1× ahead of 2× — 1.14 s vs 1.68 s and 5.82 s
-    vs 6.14 s — commit/open overhead shrinks faster than the lost
+    write to defaultParallelism tasks (one wave of writers, 8× fewer
+    files than the scan; interleaved A/B at BOTH 1M and 10M rows put
+    1× ahead of 2× — 1.14 s vs 1.68 s and 5.82 s vs 6.14 s —
+    commit/open overhead shrinks faster than the lost
     second wave costs). coalesce() only ever REDUCES partition count,
     so small inputs are untouched; at cluster scale total-cores write
     tasks is the same sizing rule (files ≈ bytes/(cores·routes),
     further split by maxRecordsPerFile), not a local[32] constant.
     """
-    import os
-
     from ..plans.routing import salted_repartition
 
     if salt_partitions:
         df = salted_repartition(df, route_col, n_salt=salt_partitions)
     else:
-        spark = df.sparkSession
-        target = int(
-            os.environ.get(
-                "ROTEL_WRITE_TASKS",
-                spark.sparkContext.defaultParallelism,
-            )
-        )
-        if target > 0:
-            df = df.coalesce(target)
+        df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     routes = routes or ["errors", "ops", "archive"]
     obs = Observation("routed_write")
     metrics = [
@@ -110,17 +100,22 @@ def fan_out(
     df: DataFrame,
     sinks: list[dict],
     max_records_per_file: int = 8192,
-    persist: bool = True,
 ) -> dict[str, int]:
     """Write df to every sink; returns {sink_name: rows_written}.
 
     sink spec: {"name": str, "path": str, "predicate": str | None,
                 "format": "parquet" | "json" | "noop",
+                "mode": "overwrite" | "append" | ...,
                 "partition_by": [col, ...] | None}
     predicate=None → broadcast-to-all (rotel fanout); a predicate makes
     it a routed sink (north rule).
+
+    With more than one sink, df is persisted for the writes and
+    unpersisted after them — unless the caller already cached it, in
+    which case the caller's cache is used and left in place.
     """
-    if persist and len(sinks) > 1:
+    persist = len(sinks) > 1 and df.storageLevel == StorageLevel.NONE
+    if persist:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     counts: dict[str, int] = {}
     try:
@@ -144,6 +139,6 @@ def fan_out(
                 w.parquet(spec["path"])
             counts[spec["name"]] = obs.get["rows"]
     finally:
-        if persist and len(sinks) > 1:
+        if persist:
             df.unpersist()
     return counts

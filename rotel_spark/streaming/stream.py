@@ -7,24 +7,26 @@ channels for backpressure. Structured Streaming mapping (SURVEY.md
 
   * trigger(processingTime=...) subsumes the batch timeout
   * maxFilesPerTrigger bounds admission (backpressure analog)
-  * foreachBatch reuses the *identical* batch stage functions — one
-    code path for batch and streaming (the whole point of the design)
-  * checkpointLocation gives exactly-once sink commits; our lineage
-    table adds per-stage counters on top
+  * foreachBatch reuses the *identical* batch stage functions and the
+    same sink plan as run_job — one code path for batch and streaming
+    (the whole point of the design)
+  * checkpointLocation makes the source offsets resumable, but sink
+    writes are at-least-once: a micro-batch that crashes after its sink
+    writes and before its commit-log entry is re-run on restart and
+    appends its rows again. run_job's transactional batches
+    (staging dir + atomic rename + lineage commit) are the exactly-once
+    path.
 
 No event-time windowing: the reference has none (SURVEY.md §2.8 —
 parsed-or-observed timestamp is the only late-data policy), so no
-watermarks are required for parity. `windowed_severity_counts` is
-provided anyway as the idiomatic extension for users who want it.
+watermarks are required for parity.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..plans.pipeline import build_pipeline
-from ..plans.routing import with_route
+from ..plans.pipeline import build_pipeline, sink_plan
 
 
 def stream_lines(
@@ -49,17 +51,15 @@ def run_stream(
     available_now: bool = False,
 ):
     """Drive the config-declared pipeline per micro-batch via
-    foreachBatch; returns the StreamingQuery."""
+    foreachBatch; returns the StreamingQuery. The sink plan is built
+    once, at query start; every micro-batch appends to it."""
     pipe = build_pipeline(config)
-    sinks = config["sinks"]
+    sinks, max_records_per_file = sink_plan(config, accumulate=True)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from ..sinks.writer import fan_out
 
-        out = pipe.run(batch_df)
-        for s in sinks:
-            s.setdefault("mode", "append")
-        fan_out(out, sinks, persist=len(sinks) > 1)
+        fan_out(pipe.run(batch_df), sinks, max_records_per_file)
 
     writer = source.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
@@ -69,17 +69,3 @@ def run_stream(
     else:
         writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
     return writer.start()
-
-
-def windowed_severity_counts(
-    parsed: DataFrame, window: str = "1 minute", watermark: str = "5 minutes"
-) -> DataFrame:
-    """Optional event-time rollup with late-data handling (extension,
-    not reference parity — documented absent there, SURVEY.md §2.8)."""
-    ts = F.timestamp_seconds(F.col("time_unix_nano") / 1_000_000_000)
-    return (
-        parsed.withColumn("event_ts", ts)
-        .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window), F.col("severity_text"))
-        .count()
-    )

@@ -17,11 +17,14 @@ from pyspark.sql import functions as F
 from rotel_spark.plans.pipeline import run_job
 
 REPS = 40  # 4× the unit-test fixture volume, multi-file sinks
+SINKS = ("errors", "ops", "archive", "_quarantine")
 
 
 def _cfg(tmp: pathlib.Path, source_path: str, poison: bool) -> dict:
     processors = [
         {"kind": "parse_auto"},
+        {"kind": "quarantine", "expr": "parse_ok",
+         "path": str(tmp / "_quarantine")},
         {"kind": "filter", "expr": "parse_ok"},
         {"kind": "route"},
     ]
@@ -97,10 +100,12 @@ def test_crash_resume_exactly_once(spark, sources, tmp_path):
     assert not (errors_dir / "batch=b1").exists()
 
     # simulate the rename-committed/lineage-missing window too: a
-    # visible batch=b1 dir with real data but no lineage row
-    some_file = next((errors_dir / "batch=b0").glob("*.parquet"))
-    (errors_dir / "batch=b1").mkdir()
-    shutil.copy(some_file, errors_dir / "batch=b1" / some_file.name)
+    # visible batch=b1 dir with real data but no lineage row, in a
+    # configured sink and in the quarantine sink
+    for sink_dir in (errors_dir, tmp / "_quarantine"):
+        some_file = next((sink_dir / "batch=b0").glob("*.parquet"))
+        (sink_dir / "batch=b1").mkdir()
+        shutil.copy(some_file, sink_dir / "batch=b1" / some_file.name)
 
     # batch b1 attempt 2: clean re-drive — must roll back BOTH orphan
     # kinds, process only uncommitted rows, and commit
@@ -110,7 +115,7 @@ def test_crash_resume_exactly_once(spark, sources, tmp_path):
     )
 
     # per-sink totals across batches == the clean single-shot run
-    for name in ("errors", "ops", "archive"):
+    for name in SINKS:
         got = counts_b0.get(name, 0) + counts_b1.get(name, 0)
         assert got == ref_counts[name], name
         sink_df = spark.read.parquet(str(tmp / name))
@@ -127,7 +132,7 @@ def test_crash_resume_exactly_once(spark, sources, tmp_path):
         run_id="r", transactional_batch="b1",
     )
     assert replay == counts_b1
-    for name in ("errors", "ops", "archive"):
+    for name in SINKS:
         assert spark.read.parquet(str(tmp / name)).count() == (
             ref_counts[name]
         )

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from rotel_spark.fixtures import extract_log_line, load_pages_full
 from rotel_spark.lineage import committed_ranges, resume_filter, write_lineage
@@ -123,13 +125,18 @@ def test_lineage_written_and_resume_skips_committed(spark, sf_unit, tmp_path):
     assert resume_filter(pages, cp2).count() == 0
 
 
-def test_run_job_resume_processes_nothing_twice(spark, sf_unit, tmp_path):
+@pytest.mark.parametrize("mode", ["append", None], ids=["append", "default"])
+def test_run_job_resume_processes_nothing_twice(
+    spark, sf_unit, tmp_path, mode
+):
     """Idempotent resume (offset_tracker.rs:50-63): re-running the same
     run_id after a full commit processes zero rows and sinks keep their
-    original contents."""
+    original contents — also in the default mode, which is append for a
+    job with a lineage_path."""
     cfg = _config(tmp_path, sf_unit)
-    for s in cfg["sinks"]:
-        s["mode"] = "append"
+    if mode:
+        for s in cfg["sinks"]:
+            s["mode"] = mode
     first = run_job(spark, cfg, run_id="rr")
     assert sum(first.values()) > 0
     second = run_job(spark, cfg, run_id="rr")
@@ -170,3 +177,22 @@ def test_fanout_broadcast_to_all(spark, tmp_path):
     assert counts == {"a": 100, "b": 100}
     assert spark.read.parquet(str(tmp_path / "a")).count() == 100
     assert spark.read.parquet(str(tmp_path / "b")).count() == 100
+
+
+def test_fanout_keeps_caller_cache(spark, tmp_path):
+    """fan_out persists a multi-sink frame only when the caller has not:
+    a caller's cache outlives the call, fan_out's own cache does not."""
+    sinks = [
+        {"name": "a", "path": str(tmp_path / "a")},
+        {"name": "b", "path": str(tmp_path / "b")},
+    ]
+    cached = spark.range(100).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        assert fan_out(cached, sinks) == {"a": 100, "b": 100}
+        assert cached.storageLevel == StorageLevel.MEMORY_AND_DISK
+    finally:
+        cached.unpersist()
+
+    plain = spark.range(50)
+    assert fan_out(plain, sinks) == {"a": 50, "b": 50}
+    assert plain.storageLevel == StorageLevel.NONE

@@ -72,3 +72,55 @@ def test_stream_resume_is_exactly_once(spark, sf_unit, tmp_path):
     out = spark.read.parquet(str(tmp_path / "out2"))
     batch_n = spark.read.text(str(src) + "/*.txt").count()
     assert out.count() == batch_n  # not 2×
+
+
+def test_stream_uses_run_job_sink_plan(spark, sf_unit, tmp_path):
+    """The stream writes run_job's sink plan: quarantined lines go only
+    to the dead-letter sink, batch.max_records_per_file caps every file
+    even when a micro-batch holds more rows, and the caller's config is
+    left as it was."""
+    import copy
+
+    import pyarrow.parquet as pq
+
+    from rotel_spark.parsers.auto import parse_auto
+    from rotel_spark.streaming.stream import run_stream, stream_lines
+
+    src, _ = _write_log_files(spark, sf_unit, tmp_path)
+    cap = 100
+    cfg = {
+        "processors": [
+            {"kind": "parse_auto"},
+            {"kind": "quarantine", "expr": "parse_ok",
+             "path": str(tmp_path / "dead")},
+            {"kind": "filter", "expr": "parse_ok"},
+        ],
+        "sinks": [{"name": "out", "path": str(tmp_path / "out")}],
+        "batch": {"max_records_per_file": cap},
+    }
+    before = copy.deepcopy(cfg)
+    source = stream_lines(spark, str(src) + "/*.txt", max_files_per_trigger=2)
+    q = run_stream(
+        spark, source, cfg, str(tmp_path / "ckpt3"), available_now=True
+    )
+    q.awaitTermination(120)
+    assert cfg == before
+    batch_rows = [p.numInputRows for p in q.recentProgress if p.numInputRows]
+    assert min(batch_rows) > cap
+
+    batch = parse_auto(
+        spark.read.text(str(src) + "/*.txt").withColumnRenamed(
+            "value", "raw_line"
+        )
+    )
+    out = spark.read.parquet(str(tmp_path / "out"))
+    dead = spark.read.parquet(str(tmp_path / "dead"))
+    assert out.filter("NOT parse_ok").count() == 0
+    assert dead.filter("parse_ok").count() == 0
+    assert dead.count() == batch.filter("NOT parse_ok").count() > 0
+    assert out.count() == batch.filter("parse_ok").count()
+    for sink in ("out", "dead"):
+        files = list((tmp_path / sink).glob("*.parquet"))
+        assert files
+        for f in files:
+            assert pq.ParquetFile(f).metadata.num_rows <= cap
