@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -85,9 +86,17 @@ def write_lineage(
 
 
 def committed_ranges(spark: SparkSession, path: str, run_id: str) -> DataFrame:
+    """Ranges committed for run_id; none when nothing was ever committed:
+    the table is missing, or its directory holds no data file (a first
+    write that failed or was killed leaves the directory, maybe with a
+    ``_temporary`` inside). Any other read error raises: treating an
+    unreadable table as empty would re-drive every committed range and
+    duplicate its rows."""
     try:
         cp = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
         return spark.createDataFrame([], CHECKPOINT_SCHEMA)
     return cp.filter(F.col("run_id") == run_id)
 

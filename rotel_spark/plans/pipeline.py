@@ -7,8 +7,9 @@ every stage is a pure ``DataFrame -> DataFrame`` function, applied in
 declared order (processor chaining semantics,
 src/topology/processors.rs:561-573 — ordered, each sees the previous
 output). Catalyst fuses the whole chain into one physical plan; there
-is no per-stage materialization unless a stage opts into persist (the
-fan-out boundary does — fanout.rs clone-per-consumer ≈ persist).
+is no per-stage materialization. The fan-out is one write job: each row
+is exploded into one copy per sink it belongs to (fanout.rs
+clone-per-consumer ≈ explode), not persisted and re-read per sink.
 
 Example config::
 
@@ -147,6 +148,9 @@ def build_pipeline(config: dict) -> Pipeline:
     return p
 
 
+SINK_KEYS = {"name", "path", "predicate", "mode"}
+
+
 def sink_plan(config: dict, accumulate: bool) -> tuple[list[dict], int]:
     """The sinks a job or query writes and its per-file record cap —
     the one reader of ``config["sinks"]``, shared by ``run_job`` and
@@ -162,6 +166,10 @@ def sink_plan(config: dict, accumulate: bool) -> tuple[list[dict], int]:
       invocations (``accumulate``: every stream micro-batch, every
       resumable job), ``overwrite`` otherwise. A mode set on a sink or
       on the quarantine processor wins.
+
+    A sink spec holds ``name``, ``path``, an optional ``predicate`` and
+    an optional ``mode`` (``append`` | ``overwrite``); anything else
+    raises ``ValueError``, so a stale key is refused, not ignored.
 
     Returns new sink dicts; ``config`` is left untouched."""
     mode = "append" if accumulate else "overwrite"
@@ -189,6 +197,16 @@ def sink_plan(config: dict, accumulate: bool) -> tuple[list[dict], int]:
                 "mode": q_specs[0].get("mode", mode),
             }
         )
+    for s in sinks:
+        name = s.get("name")
+        if set(s) - SINK_KEYS:
+            raise ValueError(
+                f"sink {name!r}: unknown keys {sorted(set(s) - SINK_KEYS)}"
+            )
+        if not name or not s.get("path"):
+            raise ValueError(f"sink {name!r}: needs a name and a path")
+        if s["mode"] not in ("append", "overwrite"):
+            raise ValueError(f"sink {name!r}: unknown mode {s['mode']!r}")
     max_records_per_file = config.get("batch", {}).get(
         "max_records_per_file", 8192
     )
@@ -258,19 +276,17 @@ def run_job(
         # attempt, then write into invisible staging dirs
         staged_sinks = []
         for s in sinks:
-            if s.get("path") and s.get("format", "parquet") != "noop":
-                visible = os.path.join(
-                    s["path"], f"batch={transactional_batch}"
-                )
-                staging = os.path.join(
-                    s["path"], f"_staging_{transactional_batch}"
-                )
-                for orphan in (visible, staging):
-                    if os.path.exists(orphan):
-                        shutil.rmtree(orphan)
-                staged_pairs.append((staging, visible))
-                s = {**s, "path": staging}
-            staged_sinks.append(s)
+            visible = os.path.join(
+                s["path"], f"batch={transactional_batch}"
+            )
+            staging = os.path.join(
+                s["path"], f"_staging_{transactional_batch}"
+            )
+            for orphan in (visible, staging):
+                if os.path.exists(orphan):
+                    shutil.rmtree(orphan)
+            staged_pairs.append((staging, visible))
+            staged_sinks.append({**s, "path": staging})
         sinks = staged_sinks
 
     src = config["source"]
@@ -294,7 +310,7 @@ def run_job(
     # writes (a re-execution could lay out spark_partition_id
     # differently and commit ranges for rows never written — breaking
     # the exactly-once resume contract), and lineage must not re-run
-    # the parse DAG. fan_out sees the cached frame and leaves it be.
+    # the parse DAG.
     if lineage_path:
         out = out.persist(StorageLevel.MEMORY_AND_DISK)
     try:

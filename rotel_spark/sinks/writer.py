@@ -1,10 +1,13 @@
-"""Fan-out sink writer — persist once, write per sink.
+"""Fan-out sink writer — one write job for all sinks.
 
 Reference semantics (/root/reference/src/topology/fanout.rs:17-20,
 144-153): every batch goes to all configured exporters of its type,
-cloned for all-but-the-last consumer. Spark mapping: persist the parsed
-DataFrame once, then run one write action per sink — parse cost is paid
-once, not once per sink (SURVEY.md §4 custom work #3).
+cloned for all-but-the-last consumer. Spark mapping: tag each row with
+every sink it belongs to (a row in k sinks becomes k rows — the clone),
+write the tagged frame ONCE partitioned by sink into a hidden stage
+directory, then move each sink's partition directory into the sink's
+path. Parse cost and the job's fixed cost (scheduling, writer start-up,
+commit) are paid once, not once per sink (SURVEY.md §4 custom work #3).
 
 Batch sizing: the reference flushes at max_size=8192 records
 (src/topology/batch.rs:15-23); batch boundaries in Spark are output
@@ -18,10 +21,11 @@ itself instead of a second pass over the data.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
-from pyspark.storagelevel import StorageLevel
 
 
 def write_routed(
@@ -34,9 +38,9 @@ def write_routed(
 ) -> dict[str, int]:
     """Single-pass routed fan-out: ONE write partitioned by route,
     per-sink dirs = partition subdirectories, per-sink counts ride the
-    same job via observe. vs fan_out(): no persist, no N passes — at
-    100 TB this is the difference between scanning the parse output
-    once and N+1 times. (SURVEY.md §2.5 option (b).)
+    same job via observe. One scan of the parse output however many
+    routes — at 100 TB the difference between scanning it once and N
+    times (SURVEY.md §2.5 option (b)); fan_out is built on it.
 
     salt_partitions: repartition on (route, salt) first so a hot route
     spreads across tasks instead of serializing into one writer
@@ -101,44 +105,91 @@ def fan_out(
     sinks: list[dict],
     max_records_per_file: int = 8192,
 ) -> dict[str, int]:
-    """Write df to every sink; returns {sink_name: rows_written}.
+    """Write df to every sink in one Spark job; returns
+    {sink_name: rows_written}.
 
     sink spec: {"name": str, "path": str, "predicate": str | None,
-                "format": "parquet" | "json" | "noop",
-                "mode": "overwrite" | "append" | ...,
-                "partition_by": [col, ...] | None}
+                "mode": "overwrite" | "append"}
     predicate=None → broadcast-to-all (rotel fanout); a predicate makes
-    it a routed sink (north rule).
+    it a routed sink (north rule). Sinks are parquet.
 
-    With more than one sink, df is persisted for the writes and
-    unpersisted after them — unless the caller already cached it, in
-    which case the caller's cache is used and left in place.
+    Each row is tagged with the positions of the sinks it belongs to and
+    exploded, so a row in k sinks is written k times — exactly what k
+    separate writes produce. ``write_routed`` writes the tagged frame
+    partitioned by that tag into a hidden ``_fanout_<uuid>`` stage next
+    to the first sink's path (per-sink counts ride the job via observe),
+    then each ``_sink=<i>`` directory's files are renamed into sink i's
+    path: ``overwrite`` clears the path first, ``append`` adds to it. A
+    sink that receives no rows still gets one schema-only file, so it
+    reads back as an empty table. The listing, renames and deletes go
+    through the Hadoop file system of the paths (local, HDFS, an object
+    store), so they act where Spark wrote; every sink must be on the
+    stage's file system, or ``ValueError`` is raised before anything is
+    written. The stage is removed whatever happens.
     """
-    persist = len(sinks) > 1 and df.storageLevel == StorageLevel.NONE
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts: dict[str, int] = {}
-    try:
-        for spec in sinks:
-            sink_df = df
-            if spec.get("predicate"):
-                sink_df = sink_df.filter(spec["predicate"])
-            obs = Observation(f"sink:{spec['name']}")
-            sink_df = sink_df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            fmt = spec.get("format", "parquet")
-            w = sink_df.write.mode(spec.get("mode", "overwrite")).option(
-                "maxRecordsPerFile", max_records_per_file
+    if not sinks:
+        return {}
+    spark = df.sparkSession
+    hadoop = spark._jvm.org.apache.hadoop  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+
+    def qualified(path: str):
+        p = hadoop.fs.Path(path)
+        return p.getFileSystem(conf).makeQualified(p)
+
+    paths = [qualified(s["path"]) for s in sinks]
+    fs = paths[0].getFileSystem(conf)
+    for spec, p in zip(sinks, paths):
+        if not p.getFileSystem(conf).getUri().equals(fs.getUri()):
+            raise ValueError(
+                f"sink {spec['name']!r}: {spec['path']} is not on the file "
+                f"system of {sinks[0]['path']}; fan_out renames across one"
             )
-            if spec.get("partition_by"):
-                w = w.partitionBy(*spec["partition_by"])
-            if fmt == "noop":
-                w.format("noop").save()
-            elif fmt == "json":
-                w.json(spec["path"])
+    stage = hadoop.fs.Path(paths[0].getParent(), f"_fanout_{uuid.uuid4().hex}")
+    tags = [
+        F.when(F.expr(s["predicate"]), F.lit(str(i)))
+        if s.get("predicate")
+        else F.lit(str(i))
+        for i, s in enumerate(sinks)
+    ]
+    tagged = df.withColumn("_sink", F.explode(F.array_compact(F.array(*tags))))
+    try:
+        got = write_routed(
+            tagged,
+            stage.toString(),
+            route_col="_sink",
+            routes=[str(i) for i in range(len(sinks))],
+            max_records_per_file=max_records_per_file,
+        )
+        counts = {}
+        empty = hadoop.fs.Path(stage, "_empty")
+        for i, (spec, path) in enumerate(zip(sinks, paths)):
+            counts[spec["name"]] = n = got[str(i)]
+            if n:
+                src = hadoop.fs.Path(stage, f"_sink={i}")
             else:
-                w.parquet(spec["path"])
-            counts[spec["name"]] = obs.get["rows"]
+                # one schema-only file, copied into every empty sink
+                src = empty
+                if not fs.exists(empty):
+                    df.limit(0).write.parquet(empty.toString())
+            if spec.get("mode", "overwrite") == "overwrite":
+                fs.delete(path, True)
+            fs.mkdirs(path)
+            # data files; not _SUCCESS. A checksummed (local) file system
+            # lists no .crc files and renames each with its data file.
+            for st in fs.listStatus(src):
+                f = st.getPath()
+                if f.getName().startswith(("_", ".")):
+                    continue
+                dst = hadoop.fs.Path(path, f.getName())
+                if n:
+                    ok = fs.rename(f, dst)
+                else:
+                    ok = hadoop.fs.FileUtil.copy(fs, f, fs, dst, False, conf)
+                if not ok:
+                    raise OSError(f"fan_out: could not place {f} in {path}")
+            # the completion marker a Spark write leaves in its path
+            fs.create(hadoop.fs.Path(path, "_SUCCESS"), True).close()
     finally:
-        if persist:
-            df.unpersist()
+        fs.delete(stage, True)
     return counts

@@ -10,6 +10,9 @@ channels for backpressure. Structured Streaming mapping (SURVEY.md
   * foreachBatch reuses the *identical* batch stage functions and the
     same sink plan as run_job — one code path for batch and streaming
     (the whole point of the design)
+  * a micro-batch is one Spark job: the batch's files are listed on the
+    driver (session.build_spark) and fan_out writes every sink in one
+    job, so the per-batch fixed cost is one job's scheduling and commit
   * checkpointLocation makes the source offsets resumable, but sink
     writes are at-least-once: a micro-batch that crashes after its sink
     writes and before its commit-log entry is re-run on restart and

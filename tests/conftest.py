@@ -1,6 +1,13 @@
+import os
+
 import pytest
 
 from rotel_spark.session import build_spark
+
+# the session pretouches ¾ of its heap at start; the 16g default leaves
+# a 16 GB test host no room for the Python workers. A test host with
+# more RAM can raise it through the same variable.
+os.environ.setdefault("ROTEL_SPARK_DRIVER_MEM", "8g")
 
 
 @pytest.fixture(scope="session")

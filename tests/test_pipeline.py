@@ -5,6 +5,7 @@ resume. Mirrors the reference's pipeline-level tests
 from __future__ import annotations
 
 import pathlib
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +13,7 @@ from pyspark.storagelevel import StorageLevel
 
 from rotel_spark.fixtures import extract_log_line, load_pages_full
 from rotel_spark.lineage import committed_ranges, resume_filter, write_lineage
-from rotel_spark.plans.pipeline import build_pipeline, run_job
+from rotel_spark.plans.pipeline import build_pipeline, run_job, sink_plan
 from rotel_spark.sinks.writer import fan_out
 
 
@@ -180,8 +181,8 @@ def test_fanout_broadcast_to_all(spark, tmp_path):
 
 
 def test_fanout_keeps_caller_cache(spark, tmp_path):
-    """fan_out persists a multi-sink frame only when the caller has not:
-    a caller's cache outlives the call, fan_out's own cache does not."""
+    """fan_out leaves the caller's storage level as it found it: a
+    caller's cache outlives the call, an uncached frame stays uncached."""
     sinks = [
         {"name": "a", "path": str(tmp_path / "a")},
         {"name": "b", "path": str(tmp_path / "b")},
@@ -196,3 +197,133 @@ def test_fanout_keeps_caller_cache(spark, tmp_path):
     plain = spark.range(50)
     assert fan_out(plain, sinks) == {"a": 50, "b": 50}
     assert plain.storageLevel == StorageLevel.NONE
+
+
+def test_fanout_empty_sink_reads_back_empty(spark, tmp_path):
+    """A sink whose predicate matches nothing counts 0 and still gets a
+    schema-only file, so it reads back as an empty table."""
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    counts = fan_out(
+        df,
+        [
+            {"name": "some", "predicate": "id < 10",
+             "path": str(tmp_path / "some")},
+            {"name": "none", "predicate": "id < 0",
+             "path": str(tmp_path / "none")},
+        ],
+    )
+    assert counts == {"some": 10, "none": 0}
+    none = spark.read.parquet(str(tmp_path / "none"))
+    assert none.count() == 0
+    assert none.columns == ["id", "v"]
+    assert spark.read.parquet(str(tmp_path / "some")).count() == 10
+
+
+def test_fanout_overwrite_and_append(spark, tmp_path):
+    """overwrite replaces what a sink held, append adds to it; no hidden
+    stage directory is left next to the sinks."""
+    def sinks(mode):
+        return [{"name": n, "path": str(tmp_path / n), "mode": mode}
+                for n in ("a", "b")]
+
+    fan_out(spark.range(30), sinks("overwrite"))
+    fan_out(spark.range(20), sinks("append"))
+    assert spark.read.parquet(str(tmp_path / "a")).count() == 50
+    fan_out(spark.range(5), sinks("overwrite"))
+    assert spark.read.parquet(str(tmp_path / "b")).count() == 5
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["a", "b"]
+
+
+@pytest.mark.parametrize(
+    "sink, message",
+    [
+        ({"name": "s", "path": "/x", "format": "json"}, "unknown keys"),
+        ({"name": "s", "path": "/x", "partition_by": ["d"]}, "unknown keys"),
+        ({"name": "s"}, "needs a name and a path"),
+        ({"name": "s", "path": "/x", "mode": "ignore"}, "unknown mode"),
+    ],
+    ids=["format", "partition_by", "no-path", "mode"],
+)
+def test_sink_plan_rejects_bad_specs(sink, message):
+    """A sink key fan_out does not honour is refused, not written as
+    parquet regardless."""
+    with pytest.raises(ValueError, match=message):
+        sink_plan({"sinks": [sink]}, accumulate=False)
+
+
+def test_committed_ranges_empty_until_a_commit(spark, tmp_path):
+    """A missing lineage table, an empty directory and one holding only a
+    ``_temporary`` left by a failed or killed first write all mean
+    "nothing committed", so the job can be resumed."""
+    lineage = tmp_path / "_lineage"
+    assert committed_ranges(spark, str(lineage), "r").count() == 0
+    lineage.mkdir()
+    assert committed_ranges(spark, str(lineage), "r").count() == 0
+    (lineage / "_temporary" / "0").mkdir(parents=True)
+    (lineage / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"x")
+    assert committed_ranges(spark, str(lineage), "r").count() == 0
+
+
+def test_committed_ranges_raises_on_unreadable_table(spark, tmp_path):
+    """An unreadable lineage table must fail the job, not re-drive every
+    committed range as if it were new."""
+    lineage = tmp_path / "_lineage"
+    lineage.mkdir()
+    (lineage / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        committed_ranges(spark, str(lineage), "r").count()
+
+
+def test_fanout_to_uri_paths(spark, tmp_path):
+    """Sink paths given as URIs are written, listed and renamed on the
+    file system the URI names, not read as local relative paths."""
+    uri = tmp_path.as_uri()
+    df = spark.range(40)
+    counts = fan_out(
+        df,
+        [
+            {"name": "all", "path": f"{uri}/all"},
+            {"name": "low", "predicate": "id < 5", "path": f"{uri}/low"},
+        ],
+    )
+    assert counts == {"all": 40, "low": 5}
+    assert spark.read.parquet(f"{uri}/low").count() == 5
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["all", "low"]
+    assert not pathlib.Path("file:").exists()
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs fn() starts."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fanout_is_one_spark_job(spark, tmp_path):
+    """Three predicate sinks are written by one Spark job, not one job
+    per sink plus a persist."""
+    df = spark.range(300).withColumn("band", F.col("id") % 3)
+    sinks = [
+        {"name": f"b{b}", "predicate": f"band = {b}",
+         "path": str(tmp_path / f"b{b}")}
+        for b in range(3)
+    ]
+    counts = {}
+    assert _jobs_started(spark, lambda: counts.update(fan_out(df, sinks))) == 1
+    assert counts == {"b0": 100, "b1": 100, "b2": 100}
+
+
+def test_many_explicit_paths_list_on_driver(spark, tmp_path):
+    """Reading 100 explicit files (a full stream micro-batch) lists them
+    on the driver instead of starting a listing job."""
+    paths = []
+    for i in range(100):
+        f = tmp_path / f"f{i:03d}.txt"
+        f.write_text(f"line {i}\n")
+        paths.append(str(f))
+    assert _jobs_started(spark, lambda: spark.read.text(paths)) == 0
