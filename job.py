@@ -33,10 +33,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--batch",
         default=None,
-        help="transactional batch id: crash-safe two-phase sink commit"
-        " (staging dir → atomic rename → lineage); re-driving a"
-        " committed batch is an idempotent no-op, re-driving a crashed"
-        " one rolls back its orphans first (requires lineage_path)",
+        help="transactional batch id: crash-safe sink commit (every"
+        " sink's <path>/batch=<id> replaced whole, then lineage);"
+        " re-driving a committed batch is an idempotent no-op,"
+        " re-driving a crashed one replaces what it left (requires"
+        " lineage_path)",
     )
     args = ap.parse_args(argv)
 

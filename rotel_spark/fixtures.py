@@ -246,50 +246,14 @@ def register_documents(
     df.createOrReplaceTempView("documents")
 
 
-_PAGES_DF_CACHE: dict = {}
-
-
-def pages_cache_path(base: str, sf_dir: str, reps: int) -> str:
-    """Canonical path of a materialized pages table under `base`."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return f"{base}/pages_{tag}_x{reps}"
-
-
 def load_pages(
     spark: SparkSession, sf_dir: str, reps: int = DEFAULT_REPS
 ) -> DataFrame:
     """The `pages` table as a DataFrame (no html column — see build_html).
 
-    If ROTEL_PAGES_CACHE_DIR is set and a materialized table for this
-    (sf, reps) exists there, read it instead of regenerating — the
-    bench uses this so per-query timings measure the operator, not
-    fixture generation (the cached table is a column superset).
-
     reps > 64 switches to the explode-based base (identical rows; the
     UNION-ALL chain overflows the analyzer stack at large reps) and
     pre-spreads documents across cores so generation parallelizes."""
-    import os
-
-    cache_base = os.environ.get("ROTEL_PAGES_CACHE_DIR")
-    if cache_base:
-        p = pages_cache_path(cache_base, sf_dir, reps)
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            # Reuse the scan DataFrame per (session, path): it is an
-            # immutable unresolved plan over a _SUCCESS-finalized dir
-            # (materialize_pages never rewrites one), and re-creating
-            # it pays footer/schema re-inference plus py4j round trips
-            # on EVERY query construction. No data is cached — only
-            # the plan object, exactly like the expression caches in
-            # parsers.auto/nginx. The value keeps a strong ref to its
-            # session so an id() can never be reused by a successor
-            # session while the entry exists.
-            key = (id(spark), p)
-            hit = _PAGES_DF_CACHE.get(key)
-            if hit is not None and hit[0] is spark:
-                return hit[1]
-            df = spark.read.parquet(p)
-            _PAGES_DF_CACHE[key] = (spark, df)
-            return df
     fast = reps > 64
     register_documents(
         spark,
@@ -340,28 +304,6 @@ def load_pages_full(
     return df.withColumn(
         "warc_ts", F.timestamp_seconds(F.col("warc_ts_sec"))
     )
-
-
-def materialize_pages(
-    spark: SparkSession,
-    sf_dir: str,
-    reps: int,
-    path: str,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Write the pages table (input_hint shape + ground-truth cols) to
-    parquet once and return the reader. This is the 'Iceberg table'
-    the pipeline scans — generation is data-prep, not pipeline work,
-    so benchmarks time the scan→parse→route→write path only."""
-    import os
-
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        df = load_pages_full(spark, sf_dir, reps)
-        if partitions:
-            df = df.repartition(partitions)
-        df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 def extract_text(df: DataFrame, html_col: str = "html") -> DataFrame:

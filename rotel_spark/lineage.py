@@ -13,13 +13,18 @@ Range key: page_id (monotone row id). A range is committed only after
 ALL sinks for the run committed — the same "ack fires when the last
 ref resolves" rule as payload.rs:426-439.
 
-Delivery semantics: sink rows are exactly-once (every committed row is
-inside a committed range by construction). That includes the
-dead-letter sink: the quarantine stage tags rows instead of dropping
-them, so they ride the same fan-out and fall inside the committed
-ranges. Rows a filter DROPS before the fan-out may fall outside all
-committed ranges (e.g. a garbage line at a partition boundary) and be
-re-observed — and dropped again — on resume.
+Delivery semantics: a transactional batch (``run_job``'s
+``transactional_batch``) never writes a sink row twice: its keyed
+fan_out replaces ``<sink>/batch=<batch>`` whole, so a re-drive after a
+crash before the lineage commit replaces what the crashed attempt
+moved, and once committed the batch is not run again. That includes
+the dead-letter sink: the quarantine stage tags rows instead of
+dropping them, so they ride the same fan-out. The rows a resumed batch
+skips are those inside the committed ranges. Rows a filter DROPS
+before the fan-out may fall outside all committed ranges (e.g. a
+garbage line at a partition boundary) and be re-observed — and dropped
+again — on resume. The sinks and this table must be on a file system
+with atomic rename (local, HDFS), not an object store.
 """
 
 from __future__ import annotations
@@ -92,6 +97,12 @@ def committed_ranges(spark: SparkSession, path: str, run_id: str) -> DataFrame:
     ``_temporary`` inside). Any other read error raises: treating an
     unreadable table as empty would re-drive every committed range and
     duplicate its rows."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    if not hpath.getFileSystem(conf).exists(hpath):
+        # answered without a Spark read, which would log the missing
+        # path's stack trace
+        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
     try:
         cp = spark.read.parquet(path)
     except AnalysisException as e:

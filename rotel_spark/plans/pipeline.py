@@ -33,8 +33,6 @@ Example config::
 from __future__ import annotations
 
 import json
-import os
-import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -151,7 +149,7 @@ def build_pipeline(config: dict) -> Pipeline:
 SINK_KEYS = {"name", "path", "predicate", "mode"}
 
 
-def sink_plan(config: dict, accumulate: bool) -> tuple[list[dict], int]:
+def sink_plan(config: dict) -> tuple[list[dict], int]:
     """The sinks a job or query writes and its per-file record cap —
     the one reader of ``config["sinks"]``, shared by ``run_job`` and
     ``run_stream``.
@@ -162,17 +160,20 @@ def sink_plan(config: dict, accumulate: bool) -> tuple[list[dict], int]:
       out in the same pass as the good ones;
     * ``max_records_per_file`` from ``config["batch"]`` (the
       reference's max batch size, batch.rs:15-23);
-    * a default write mode: ``append`` when output builds up across
-      invocations (``accumulate``: every stream micro-batch, every
-      resumable job), ``overwrite`` otherwise. A mode set on a sink or
-      on the quarantine processor wins.
+    * a default write mode: ``append`` when the config has a
+      ``lineage_path`` (a resumable job adds to what earlier runs
+      committed), ``overwrite`` otherwise. A mode set on a sink or on
+      the quarantine processor wins. The mode applies to unkeyed
+      writes only: a keyed batch (``fan_out(batch=...)``, every
+      transactional batch and stream micro-batch) replaces its own
+      ``batch=<key>`` directory.
 
     A sink spec holds ``name``, ``path``, an optional ``predicate`` and
     an optional ``mode`` (``append`` | ``overwrite``); anything else
     raises ``ValueError``, so a stale key is refused, not ignored.
 
     Returns new sink dicts; ``config`` is left untouched."""
-    mode = "append" if accumulate else "overwrite"
+    mode = "append" if config.get("lineage_path") else "overwrite"
     sinks = [{"mode": mode, **s} for s in config["sinks"]]
     q_specs = [
         s for s in config.get("processors", []) if s["kind"] == "quarantine"
@@ -226,23 +227,23 @@ def run_job(
     already committed for ``run_id`` are skipped, and sinks default to
     append so a resumed run adds to what earlier runs committed.
 
-    transactional_batch: enables crash-safe batch commit for file
-    sinks (requires lineage_path). Each invocation writes its sink
-    output into an invisible staging dir (`_staging_<batch>` — the
-    leading underscore hides it from Spark readers), then atomically
-    renames it to `batch=<batch>` (visible; partition-discovery
-    compatible), then commits the lineage ranges. Crash windows:
-      * during the write — only invisible staging dirs exist; the
-        v2-committer task files that survived the crash are cleaned
-        on the next attempt;
-      * after rename, before lineage commit — the next attempt
-        detects visible batch dirs with no matching lineage stage and
-        rolls them back before re-processing.
-    Either way a re-driven batch produces exactly-once sink rows.
-    This is the local-fs/HDFS model of an Iceberg snapshot commit —
-    on an object store the rename step is replaced by a table-format
-    commit, same two-phase structure (north rule: resumable
-    mid-pipeline after executor loss)."""
+    transactional_batch: a crash-safe batch commit (requires
+    lineage_path). The batch is one keyed ``fan_out``: every sink's rows
+    land in ``<path>/batch=<batch>`` (partition-discovery compatible),
+    replacing whatever an earlier attempt left there; then the lineage
+    ranges are committed under stage ``export:<batch>``, and a batch
+    whose stage is committed is not run again (its recorded counts are
+    returned). Crash windows:
+      * during the write — only fan_out's hidden ``_fanout_<uuid>``
+        stage exists; no sink path has changed;
+      * during the moves, or after them and before the lineage commit —
+        a partly or wholly moved ``batch=<batch>`` is visible but
+        uncommitted; the re-drive replaces it.
+    Either way a re-driven batch produces exactly-once sink rows. The
+    sinks must be on a file system with atomic rename (local, HDFS):
+    on an object store a rename is a copy, so the moves are neither
+    atomic nor cheap, and a table-format commit (Iceberg, Delta) is the
+    answer there."""
     from ..fixtures import extract_log_line, load_pages_full
     from ..lineage import committed_ranges, resume_filter, write_lineage
     from ..sinks.writer import fan_out
@@ -250,9 +251,7 @@ def run_job(
     lineage_path = config.get("lineage_path")
     if transactional_batch is not None and not lineage_path:
         raise ValueError("transactional_batch requires lineage_path")
-    sinks, max_records_per_file = sink_plan(
-        config, accumulate=bool(lineage_path)
-    )
+    sinks, max_records_per_file = sink_plan(config)
 
     # one read of the lineage table serves both the committed-batch
     # check and the resume filter
@@ -265,29 +264,12 @@ def run_job(
         }
 
     batch_stage = None
-    staged_pairs = []
     if transactional_batch is not None:
         batch_stage = f"export:{transactional_batch}"
         if batch_stage in committed:
             # fully committed batch — idempotent re-drive is a no-op;
             # return the recorded counts
             return json.loads(committed[batch_stage])
-        # two-phase commit: roll back orphans from a crashed prior
-        # attempt, then write into invisible staging dirs
-        staged_sinks = []
-        for s in sinks:
-            visible = os.path.join(
-                s["path"], f"batch={transactional_batch}"
-            )
-            staging = os.path.join(
-                s["path"], f"_staging_{transactional_batch}"
-            )
-            for orphan in (visible, staging):
-                if os.path.exists(orphan):
-                    shutil.rmtree(orphan)
-            staged_pairs.append((staging, visible))
-            staged_sinks.append({**s, "path": staging})
-        sinks = staged_sinks
 
     src = config["source"]
     if src["kind"] == "pages_synthetic":
@@ -314,15 +296,12 @@ def run_job(
     if lineage_path:
         out = out.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        counts = fan_out(out, sinks, max_records_per_file)
-        # phase 2a: atomic renames make every sink's batch visible
-        for staging, visible in staged_pairs:
-            if os.path.exists(staging):
-                os.rename(staging, visible)
+        counts = fan_out(
+            out, sinks, max_records_per_file, batch=transactional_batch
+        )
         if lineage_path:
-            # phase 2b: lineage commit marks the batch processed; a
-            # crash between 2a and here is healed by the next
-            # attempt's orphan rollback
+            # the lineage commit marks the batch processed; a crash
+            # before it is healed by the re-drive's keyed write
             write_lineage(
                 out,
                 lineage_path,

@@ -17,6 +17,11 @@ sink, matching the leaf-count rule (batch_resources.rs:126-130).
 
 Per-sink counters use ``df.observe`` — metrics ride the write job
 itself instead of a second pass over the data.
+
+Delivery: a keyed write (``fan_out(batch=...)``) replaces
+``<sink>/batch=<key>`` whole, so a re-driven batch is written once; an
+unkeyed ``append`` adds its rows again. The moves need a file system
+with atomic rename (local, HDFS), not an object store.
 """
 
 from __future__ import annotations
@@ -34,17 +39,12 @@ def write_routed(
     route_col: str = "route",
     routes: list[str] | None = None,
     max_records_per_file: int = 8192,
-    salt_partitions: int | None = None,
 ) -> dict[str, int]:
     """Single-pass routed fan-out: ONE write partitioned by route,
     per-sink dirs = partition subdirectories, per-sink counts ride the
     same job via observe. One scan of the parse output however many
     routes — at 100 TB the difference between scanning it once and N
     times (SURVEY.md §2.5 option (b)); fan_out is built on it.
-
-    salt_partitions: repartition on (route, salt) first so a hot route
-    spreads across tasks instead of serializing into one writer
-    (north-rule skew handling).
 
     File sizing (guide §6): each input task writes one file per route
     it sees, so task count × routes = file count. The bench scan
@@ -61,12 +61,7 @@ def write_routed(
     tasks is the same sizing rule (files ≈ bytes/(cores·routes),
     further split by maxRecordsPerFile), not a local[32] constant.
     """
-    from ..plans.routing import salted_repartition
-
-    if salt_partitions:
-        df = salted_repartition(df, route_col, n_salt=salt_partitions)
-    else:
-        df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+    df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     routes = routes or ["errors", "ops", "archive"]
     obs = Observation("routed_write")
     metrics = [
@@ -104,6 +99,7 @@ def fan_out(
     df: DataFrame,
     sinks: list[dict],
     max_records_per_file: int = 8192,
+    batch: str | None = None,
 ) -> dict[str, int]:
     """Write df to every sink in one Spark job; returns
     {sink_name: rows_written}.
@@ -119,13 +115,20 @@ def fan_out(
     partitioned by that tag into a hidden ``_fanout_<uuid>`` stage next
     to the first sink's path (per-sink counts ride the job via observe),
     then each ``_sink=<i>`` directory's files are renamed into sink i's
-    path: ``overwrite`` clears the path first, ``append`` adds to it. A
-    sink that receives no rows still gets one schema-only file, so it
-    reads back as an empty table. The listing, renames and deletes go
-    through the Hadoop file system of the paths (local, HDFS, an object
-    store), so they act where Spark wrote; every sink must be on the
-    stage's file system, or ``ValueError`` is raised before anything is
-    written. The stage is removed whatever happens.
+    target. A sink that receives no rows still gets one schema-only
+    file, so it reads back as an empty table.
+
+    The target is the sink's path, where ``overwrite`` clears it first
+    and ``append`` adds to it — or, with a ``batch`` key, the partition
+    directory ``<path>/batch=<batch>``, which is replaced whole whatever
+    the mode. Deleting it first rolls back what an earlier attempt of
+    the same batch left there, so re-driving a batch writes its rows
+    once (the batch commit of ``run_job`` and ``run_stream``).
+
+    The listing, renames and deletes go through the Hadoop file system
+    of the paths, so they act where Spark wrote; every sink must be on
+    the stage's file system, or ``ValueError`` is raised before anything
+    is written. The stage is removed whatever happens.
     """
     if not sinks:
         return {}
@@ -172,7 +175,10 @@ def fan_out(
                 src = empty
                 if not fs.exists(empty):
                     df.limit(0).write.parquet(empty.toString())
-            if spec.get("mode", "overwrite") == "overwrite":
+            if batch is not None:
+                path = hadoop.fs.Path(path, f"batch={batch}")
+                fs.delete(path, True)
+            elif spec.get("mode", "overwrite") == "overwrite":
                 fs.delete(path, True)
             fs.mkdirs(path)
             # data files; not _SUCCESS. A checksummed (local) file system

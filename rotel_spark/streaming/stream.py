@@ -13,12 +13,15 @@ channels for backpressure. Structured Streaming mapping (SURVEY.md
   * a micro-batch is one Spark job: the batch's files are listed on the
     driver (session.build_spark) and fan_out writes every sink in one
     job, so the per-batch fixed cost is one job's scheduling and commit
-  * checkpointLocation makes the source offsets resumable, but sink
-    writes are at-least-once: a micro-batch that crashes after its sink
-    writes and before its commit-log entry is re-run on restart and
-    appends its rows again. run_job's transactional batches
-    (staging dir + atomic rename + lineage commit) are the exactly-once
-    path.
+  * sink writes are exactly-once, keyed by batch_id (Spark's
+    foreachBatch idempotence idiom): micro-batch N replaces
+    ``<sink>/batch=N`` whole, run_job's keyed fan_out commit. A batch
+    that crashes before its commit-log entry is re-run on restart with
+    the same id and files, and replaces its own output. This needs a
+    file system with atomic rename (local, HDFS; not an object store).
+  * batch ids are unique only within one checkpoint, so a sink belongs
+    to one checkpoint: a fresh checkpoint refuses sinks that already
+    hold batches, which it would silently overwrite.
 
 No event-time windowing: the reference has none (SURVEY.md §2.8 —
 parsed-or-observed timestamp is the only late-data policy), so no
@@ -55,14 +58,20 @@ def run_stream(
 ):
     """Drive the config-declared pipeline per micro-batch via
     foreachBatch; returns the StreamingQuery. The sink plan is built
-    once, at query start; every micro-batch appends to it."""
+    once, at query start; micro-batch N writes ``<sink>/batch=N``.
+
+    Raises ``ValueError`` when the checkpoint has no offsets yet but a
+    sink already holds a ``batch=`` directory: that output belongs to
+    another checkpoint, whose batch ids this query would reuse."""
     pipe = build_pipeline(config)
-    sinks, max_records_per_file = sink_plan(config, accumulate=True)
+    sinks, max_records_per_file = sink_plan(config)
+    _refuse_foreign_batches(spark, checkpoint_dir, sinks)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from ..sinks.writer import fan_out
 
-        fan_out(pipe.run(batch_df), sinks, max_records_per_file)
+        out = pipe.run(batch_df)
+        fan_out(out, sinks, max_records_per_file, batch=str(batch_id))
 
     writer = source.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
@@ -72,3 +81,24 @@ def run_stream(
     else:
         writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
     return writer.start()
+
+
+def _refuse_foreign_batches(
+    spark: SparkSession, checkpoint_dir: str, sinks: list[dict]
+) -> None:
+    hadoop = spark._jvm.org.apache.hadoop  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+
+    def holds(path: str, pattern: str) -> bool:
+        glob = hadoop.fs.Path(path, pattern)
+        return bool(glob.getFileSystem(conf).globStatus(glob))
+
+    if holds(checkpoint_dir, "offsets/[0-9]*"):
+        return
+    for s in sinks:
+        if holds(s["path"], "batch=*"):
+            raise ValueError(
+                f"sink {s['name']!r}: {s['path']} already holds batches but "
+                f"checkpoint {checkpoint_dir} has no offsets; a sink belongs "
+                "to one checkpoint"
+            )

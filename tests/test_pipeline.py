@@ -248,7 +248,7 @@ def test_sink_plan_rejects_bad_specs(sink, message):
     """A sink key fan_out does not honour is refused, not written as
     parquet regardless."""
     with pytest.raises(ValueError, match=message):
-        sink_plan({"sinks": [sink]}, accumulate=False)
+        sink_plan({"sinks": [sink]})
 
 
 def test_committed_ranges_empty_until_a_commit(spark, tmp_path):
@@ -292,6 +292,82 @@ def test_fanout_to_uri_paths(spark, tmp_path):
     assert not pathlib.Path("file:").exists()
 
 
+def test_fanout_keyed_batch_replaces_its_own_directory(spark, tmp_path):
+    """A keyed write lands in <path>/batch=<key> and replaces that
+    directory whole, whatever the sink's mode: writing a batch again
+    leaves its rows once; other batches are kept."""
+    sinks = [
+        {"name": n, "path": str(tmp_path / n), "mode": "append"}
+        for n in ("a", "b")
+    ]
+    fan_out(spark.range(30), sinks, batch="0")
+    fan_out(spark.range(20), sinks, batch="1")
+    fan_out(spark.range(20), sinks, batch="1")
+    for n in ("a", "b"):
+        got = spark.read.parquet(str(tmp_path / n))
+        assert {r["batch"]: r["count"] for r in
+                got.groupBy("batch").count().collect()} == {0: 30, 1: 20}
+    kept = [p.name for p in (tmp_path / "a").iterdir()
+            if not p.name.startswith((".", "_"))]
+    assert sorted(kept) == ["batch=0", "batch=1"]
+
+
+def test_transactional_run_job_on_uri_paths(spark, sf_unit, tmp_path):
+    """A transactional run_job whose sink, quarantine and lineage paths
+    are file: URIs commits b0 and then b1 through the file system the
+    URIs name, and b1's re-drive replaces an orphan batch=b1 left in a
+    sink and in the quarantine sink by an earlier attempt: every sink
+    holds each row once, as a single-shot run does."""
+    pages = extract_log_line(load_pages_full(spark, sf_unit, reps=4))
+    full, half = str(tmp_path / "full"), str(tmp_path / "half")
+    pages.write.parquet(full)
+    median = pages.approxQuantile("page_id", [0.5], 0.0)[0]
+    spark.read.parquet(full).filter(F.col("page_id") <= median).write.parquet(
+        half
+    )
+
+    def cfg(out: str, source: str) -> dict:
+        return {
+            "source": {"kind": "parquet", "path": source},
+            "processors": [
+                {"kind": "parse_auto"},
+                {"kind": "quarantine", "expr": "parse_ok",
+                 "path": f"{out}/_quarantine"},
+                {"kind": "filter", "expr": "parse_ok"},
+                {"kind": "route"},
+            ],
+            "sinks": [
+                {"name": r, "predicate": f"route = '{r}'",
+                 "path": f"{out}/{r}"}
+                for r in ("errors", "ops", "archive")
+            ],
+            "lineage_path": f"{out}/_lineage",
+        }
+
+    single = cfg(str(tmp_path / "single"), full)
+    single["lineage_path"] = None
+    want = run_job(spark, single, run_id="single")
+
+    base = tmp_path / "tx"
+    uri = base.as_uri()
+    b0 = run_job(spark, cfg(uri, half), run_id="r", transactional_batch="b0")
+    for sink in ("errors", "_quarantine"):
+        orphan = base / sink / "batch=b1"
+        orphan.mkdir()
+        for f in (base / sink / "batch=b0").glob("*.parquet"):
+            (orphan / f.name).write_bytes(f.read_bytes())
+    b1 = run_job(spark, cfg(uri, full), run_id="r", transactional_batch="b1")
+
+    assert {k: b0[k] + b1[k] for k in want} == want
+    for name, n in want.items():
+        got = spark.read.parquet(f"{uri}/{name}")
+        assert got.count() == got.select("page_id").distinct().count() == n
+        assert {r["batch"]: r["count"] for r in
+                got.groupBy("batch").count().collect()} == {
+                    "b0": b0[name], "b1": b1[name]}
+    assert not pathlib.Path("file:").exists()
+
+
 def _jobs_started(spark, fn) -> int:
     """Number of Spark jobs fn() starts."""
     sc = spark.sparkContext
@@ -316,6 +392,12 @@ def test_fanout_is_one_spark_job(spark, tmp_path):
     counts = {}
     assert _jobs_started(spark, lambda: counts.update(fan_out(df, sinks))) == 1
     assert counts == {"b0": 100, "b1": 100, "b2": 100}
+
+    counts.clear()
+    keyed = lambda: counts.update(fan_out(df, sinks, batch="k"))  # noqa: E731
+    assert _jobs_started(spark, keyed) == 1
+    assert counts == {"b0": 100, "b1": 100, "b2": 100}
+    assert spark.read.parquet(str(tmp_path / "b0" / "batch=k")).count() == 100
 
 
 def test_many_explicit_paths_list_on_driver(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -120,7 +121,85 @@ def test_stream_uses_run_job_sink_plan(spark, sf_unit, tmp_path):
     assert dead.count() == batch.filter("NOT parse_ok").count() > 0
     assert out.count() == batch.filter("parse_ok").count()
     for sink in ("out", "dead"):
-        files = list((tmp_path / sink).glob("*.parquet"))
+        files = list((tmp_path / sink).glob("*/*.parquet"))
         assert files
         for f in files:
             assert pq.ParquetFile(f).metadata.num_rows <= cap
+
+
+def _quarantine_config(tmp: pathlib.Path) -> dict:
+    return {
+        "processors": [
+            {"kind": "parse_auto"},
+            {"kind": "quarantine", "expr": "parse_ok",
+             "path": str(tmp / "dead")},
+            {"kind": "filter", "expr": "parse_ok"},
+        ],
+        "sinks": [{"name": "out", "path": str(tmp / "out")}],
+    }
+
+
+def test_stream_replayed_batch_is_written_once(
+    spark, sf_unit, tmp_path, monkeypatch
+):
+    """A micro-batch that fails after its sink writes and before its
+    commit-log entry is re-run on restart; it replaces its own output
+    instead of appending it again, so every sink holds each line once."""
+    import rotel_spark.sinks.writer as writer
+    from rotel_spark.parsers.auto import parse_auto
+    from rotel_spark.streaming.stream import run_stream, stream_lines
+
+    src, _ = _write_log_files(spark, sf_unit, tmp_path)
+    cfg = _quarantine_config(tmp_path)
+    real, calls = writer.fan_out, []
+
+    def fail_once_after_writing(*args, **kwargs):
+        counts = real(*args, **kwargs)
+        calls.append(counts)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before the commit log")
+        return counts
+
+    monkeypatch.setattr(writer, "fan_out", fail_once_after_writing)
+    for attempt in range(2):
+        source = stream_lines(
+            spark, str(src) + "/*.txt", max_files_per_trigger=2
+        )
+        q = run_stream(
+            spark, source, cfg, str(tmp_path / "ckpt"), available_now=True
+        )
+        if attempt == 0:
+            with pytest.raises(Exception, match="injected crash"):
+                q.awaitTermination(120)
+        else:
+            q.awaitTermination(120)
+    assert len(calls) > 2  # the failed batch ran again
+
+    batch = parse_auto(
+        spark.read.text(str(src) + "/*.txt").withColumnRenamed(
+            "value", "raw_line"
+        )
+    )
+    for sink, expr in (("out", "parse_ok"), ("dead", "NOT parse_ok")):
+        want = batch.filter(expr).select("raw_line")
+        got = spark.read.parquet(str(tmp_path / sink)).select("raw_line")
+        assert got.count() == want.count() > 0, sink
+        assert got.exceptAll(want).count() == 0, sink
+
+
+def test_stream_refuses_sinks_of_another_checkpoint(spark, tmp_path):
+    """Batch ids restart at 0 with a fresh checkpoint, so a query on one
+    refuses a sink that already holds batches instead of overwriting
+    them."""
+    from rotel_spark.streaming.stream import run_stream, stream_lines
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (tmp_path / "dead" / "batch=0").mkdir(parents=True)
+    source = stream_lines(spark, str(src) + "/*.txt")
+    with pytest.raises(ValueError, match="belongs to one checkpoint"):
+        run_stream(
+            spark, source, _quarantine_config(tmp_path),
+            str(tmp_path / "ckpt"), available_now=True,
+        )
+    assert not (tmp_path / "ckpt").exists()
